@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: runs the headline queries against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -341,7 +343,7 @@ object Bench {
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.split("\\s+")(0).toDouble finally src.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** Re-measure the spin until two consecutive runs sit within 25% of
     * the best seen (the box stopped improving ⇒ likely quiet), up to
@@ -994,11 +996,11 @@ object Bench {
         val prev = Option(dir.list()).getOrElse(Array.empty[String])
           .collect { case pat(n) => n.toInt }
         if (prev.isEmpty) 1 else prev.max + 1
-      } catch { case _: Throwable => 0 }
+      } catch { case NonFatal(_) => 0 }
     Seq("bench_full.json", s"bench_full_r$roundN.json").foreach { f =>
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(f), (fullJson + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $f write failed: $e") }
     }
     System.err.println(fullJson)

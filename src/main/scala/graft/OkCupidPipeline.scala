@@ -3,10 +3,12 @@ package graft
 import graft.functions.TextFunctions
 import graft.operators._
 import org.apache.spark.ml.Pipeline
+import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.classification.DecisionTreeClassifier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end replication of the reference pipeline
   * (`/root/reference/Week5_datingNLP.R`) on the real corpus schema:
@@ -94,14 +96,14 @@ object OkCupidPipeline {
     * the earlier fixed depth-3 approximated). Returns the confusion
     * matrix (prediction × label counts) and accuracy.
     *
-    * The transformed corpus is projected down to (label, features) and
-    * persisted before the split: the text chain (clean → tokenize →
-    * stop → stem → vectorize) is array-valued per row and evaluates
-    * interpreted, so letting the split window, the tree fit, and each
-    * evaluation action re-derive it from raw essays — while also
-    * shuffling every intermediate column — multiplies the most
-    * expensive stage of the whole pipeline by the number of downstream
-    * actions (~6× measured at 60k docs).
+    * The transformed corpus is projected down to (label, features),
+    * flagged by the split and persisted before any tree work: the text
+    * chain (clean → tokenize → stop → stem → vectorize) is array-valued
+    * per row and evaluates interpreted, so letting the split window,
+    * the tree fit, and each evaluation action re-derive it from raw
+    * essays — while also shuffling every intermediate column —
+    * multiplies the most expensive stage of the whole pipeline by the
+    * number of downstream actions (~6× measured at 60k docs).
     */
   def trainAndEvaluate(
       profiles: DataFrame,
@@ -117,11 +119,26 @@ object OkCupidPipeline {
   }
 
   /** [[trainAndEvaluate]] plus per-stage wall seconds — featurize
-    * (token chain + vectorizer fit/transform, forced by the row
-    * count), fit (stratified split + data-sized repartition + tree
-    * grow), prune_eval (cp prune + predict + confusion) — so a bench
-    * regression is attributable to a stage instead of a coin flip on
-    * the ~85%-of-wall total.
+    * (token chain, vectorizer fit/transform and the stratified split,
+    * forced by the row count of the pinned split frame), fit
+    * (data-sized repartition + tree grow), prune_eval (cp prune +
+    * predict + confusion) — so a bench regression is attributable to
+    * a stage instead of a coin flip on the ~85%-of-wall total.
+    *
+    * Two frames are pinned, each because more than one job reads it:
+    *   - the (label, tokens) projection, read by the vectorizer fit
+    *     and by both branches of the split (its quota counts and its
+    *     rank window) — otherwise each re-derives every token from raw
+    *     essays;
+    *   - the (label, features, is_train) split frame, the ONE pin the
+    *     tree stage reads: MLlib's training passes read its train
+    *     filter and the evaluation reads its test filter. Pinning the
+    *     flag rather than the bare features keeps the content-hash
+    *     split (a counts aggregate, a quota broadcast and a rank
+    *     window) from re-running once per reader.
+    * The label carries binary `NominalAttribute` metadata so MLlib
+    * takes the class count from the schema instead of scanning for
+    * the largest label.
     */
   def trainAndEvaluateTimed(
       profiles: DataFrame,
@@ -132,87 +149,72 @@ object OkCupidPipeline {
       cp: Double = 0.02): (DataFrame, Double, Seq[(String, Double)]) = {
     val essays = withEssays(profiles)
       .withColumn("label", (col("sex") === "m").cast("double"))
-    // Evaluate the text chain ONCE: run the transformer prefix of the
-    // feature pipeline, persist the (label, tokens) projection, and
-    // let the vectorizer fit AND transform read the persisted tokens —
-    // otherwise the vocab fit and the feature transform each re-derive
-    // every token from raw essays.
     val tFeat0 = System.nanoTime()
     val stages = featurePipeline(minDocFreq, minTermFreq).getStages
     val tokens = new Pipeline().setStages(stages.init)
       .fit(essays).transform(essays)
       .select(col("label"), col("tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // try/finally from the FIRST persist: a mid-pipeline failure must
     // not leave 60k-row caches stranded in the block manager (the
     // bench keeps the JVM alive across queries)
     try {
       val features = stages.last.asInstanceOf[TrimmedCountVectorizer]
         .fit(tokens).transform(tokens)
-        .select(col("label"), col("features"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("label").as("label", binaryLabel), col("features"))
+      val split = StratifiedSplit.withSplitFlag(features, "label", 0.7, seed)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val nRows = features.count() // forces the whole featurize chain
+        val nRows = split.count() // forces featurize and the split
         val featurizeSec = (System.nanoTime() - tFeat0) / 1e9
         val (confusion, acc, fitSec, pruneEvalSec) =
-          trainOnFeatures(features, profiles, nRows, maxDepth, seed, cp)
+          trainOnSplit(split, nRows, maxDepth, seed, cp)
         (confusion, acc, Seq(
           "featurize" -> featurizeSec,
           "fit" -> fitSec,
           "prune_eval" -> pruneEvalSec))
-      } finally features.unpersist()
+      } finally split.unpersist()
     } finally tokens.unpersist()
   }
 
-  /** Tree-fit partition count: nRows/rowsPerPartition rounded up,
-    * clamped to [1, parallelism − 2]. The upper clamp ENFORCES the
-    * headroom rule the sweep comment above documents: the same
-    * round-11 sweep that measured 8.5 s at 30 busy partitions read a
-    * 52.9 s cliff at 32 (= every local[32] thread busy, starving
-    * Spark's scheduler/GC threads), so saturating `parallelism` is
-    * never the right answer — any corpus ≥ (parallelism−1)·2048 rows
-    * would land exactly on the measured cliff. Pure arithmetic so
+  /** Column metadata of the 0/1 label: two classes, known up front. */
+  private val binaryLabel =
+    NominalAttribute.defaultAttr.withName("label").withNumValues(2).toMetadata()
+
+  /** Tree-fit partition count: nRows/2048 rounded up, clamped to
+    * [1, parallelism − 2].
+    *
+    * Training is right-sized to the DATA, not to the session
+    * parallelism. 2048 rows per partition is measured: a sweep at local[32] over the
+    * 59,946-row sf0.1 corpus (quiet box, best of 2 per point) read
+    * fit = 26.5 s at 8192 rows/partition (8 partitions, 24 cores
+    * idle), 10.9 s at 4096 (15), 8.5 s at 2048 (30) and 52.9 s at 1024
+    * (32 partitions). The upper clamp keeps the cliff out of reach:
+    * with every executor thread busy, Spark's own scheduler and GC
+    * threads starve, so any corpus ≥ (parallelism−1)·2048 rows would
+    * otherwise land exactly on it. Leaving two threads of headroom is
+    * the same rule a cluster follows per executor. Pure arithmetic so
     * the spec pins the clamp without a fit.
     */
-  private[graft] def treePartitions(
-      parallelism: Int, nRows: Long, rowsPerPartition: Long): Int = {
+  private[graft] def treePartitions(parallelism: Int, nRows: Long): Int = {
     val cap = math.max(1, parallelism - 2).toLong
-    math.max(1L, math.min(cap, nRows / rowsPerPartition + 1)).toInt
+    math.max(1L, math.min(cap, nRows / 2048L + 1)).toInt
   }
 
-  /** Split + train + evaluate on a persisted (label, features) frame.
+  /** Train + evaluate on the pinned (label, features, is_train) frame.
     * Returns (confusion, accuracy, fit seconds, prune+eval seconds).
     */
-  private def trainOnFeatures(
-      features: DataFrame,
-      profiles: DataFrame,
+  private def trainOnSplit(
+      split: DataFrame,
       nRows: Long,
       maxDepth: Int,
       seed: Long,
       cp: Double): (DataFrame, Double, Double, Double) = {
+    val spark = split.sparkSession
     val tFit0 = System.nanoTime()
-    val (train0, test0) = StratifiedSplit.split(features, "label", 0.7, seed)
-    // The content-hash split keeps the input's partitioning (its only
-    // shuffle is the tiny per-(shard,label) quota aggregate), so the
-    // train/test frames inherit whatever width the feature pipeline
-    // left. Right-size before training — to the DATA, not the session
-    // parallelism. 2048 rows/partition is MEASURED, not assumed: a
-    // round-11 sweep at local[32] over the 59,946-row sf0.1 corpus
-    // (quiet box, bracket-spin-verified best-of-2 per point) read
-    // fit = 26.5 s at 8192 (8 partitions — 24 cores idle), 10.9 s at
-    // 4096 (15), 8.5 s at 2048 (30), and a cliff to 52.9 s at 1024
-    // (32 partitions = every executor thread busy, which starves
-    // Spark's own scheduler/GC threads at local[32]). Leaving ~2
-    // threads of headroom below the core count is the same rule a
-    // 1000-executor cluster follows per-executor.
-    val parallelism = features.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val rowsPerPartition =
-      sys.env.get("SPARK_GRAFT_TREE_ROWS_PER_PART").map(_.toLong)
-        .getOrElse(2048L)
-    val nPart = treePartitions(parallelism, nRows, rowsPerPartition)
-    val train = train0.repartition(nPart)
-    val test = test0.repartition(nPart)
+    val parallelism = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val train = split.filter(col("is_train")).drop("is_train")
+      .repartition(treePartitions(parallelism, nRows))
     // MLlib's distributed trainer is the SCALE path (sampled bins,
     // per-level aggregateByKey — the right trade at 60k..100 TB
     // rows); its fitted tree depends on the partition layout, which
@@ -228,26 +230,28 @@ object OkCupidPipeline {
     // rpart's capacity control: weakest-link prune at cp (driver-side
     // over the node tree; the model is already driver-resident)
     val model = if (cp > 0) TreePruning.pruneCp(grown, cp) else grown
-    val predictions = model.transform(test)
-      .select(col("prediction"), col("label"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val confusionRows = predictions
-      .groupBy(col("prediction"), col("label"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("prediction"), col("label"))
-      .collect()
-    val total = confusionRows.map(_.getAs[Long]("n")).sum
-    val correct = confusionRows
-      .filter(r => r.getDouble(0) == r.getDouble(1))
-      .map(_.getAs[Long]("n")).sum
-    predictions.unpersist()
-    val confusion = profiles.sparkSession
-      .createDataFrame(
-        profiles.sparkSession.sparkContext.parallelize(confusionRows.toSeq, 1),
-        StructType(Seq(
-          StructField("prediction", DoubleType, nullable = false),
-          StructField("label", DoubleType, nullable = false),
-          StructField("n", LongType, nullable = false))))
+    // The test rows are only predicted and counted once, so they are
+    // neither repartitioned nor pinned; the ≤ 4 confusion cells are
+    // ordered on the driver and returned as a local frame, so neither
+    // the sort nor the caller's collect launches a job.
+    val test = split.filter(!col("is_train")).drop("is_train")
+    val cells = {
+      import Ordering.Double.TotalOrdering
+      model.transform(test)
+        .groupBy(col("prediction"), col("label"))
+        .agg(count(lit(1)).as("n"))
+        .collect()
+        .sortBy(r => (r.getDouble(0), r.getDouble(1)))
+    }
+    val total = cells.map(_.getLong(2)).sum
+    val correct = cells.filter(r => r.getDouble(0) == r.getDouble(1))
+      .map(_.getLong(2)).sum
+    val confusion = spark.createDataFrame(
+      java.util.Arrays.asList(cells: _*),
+      StructType(Seq(
+        StructField("prediction", DoubleType, nullable = false),
+        StructField("label", DoubleType, nullable = false),
+        StructField("n", LongType, nullable = false))))
     val pruneEvalSec = (System.nanoTime() - tEval0) / 1e9
     (confusion, correct.toDouble / total, fitSec, pruneEvalSec)
   }

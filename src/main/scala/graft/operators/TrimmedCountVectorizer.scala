@@ -8,6 +8,7 @@ import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable, I
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Bag-of-words vectorizer with the reference's `dfm_trim` semantics
   * (`Week5_datingNLP.R:92,105`): keep a term iff document-frequency ≥
@@ -64,21 +65,30 @@ class TrimmedCountVectorizer(override val uid: String)
       .select(col("__doc"), explode(col("__tokens")).as("__term"))
       .groupBy(col("__doc"), col("__term"))
       .agg(count(lit(1)).as("__cnt"))
-    // The (tf desc, term asc) order doubles as the deterministic
-    // maxVocabSize tie-break; limit() plans TakeOrderedAndProject (k
-    // rows per partition, k at the driver), so the collect is bounded
-    // by construction, not by hoping the trim thresholds are high.
     val survivors = byDocTerm
       .groupBy(col("__term"))
       .agg(count(lit(1)).as("__df"), sum(col("__cnt")).as("__tf"))
       .filter(col("__df") >= $(minDocFreq) && col("__tf") >= $(minTermFreq))
-      .orderBy(desc("__tf"), asc("__term"))
-      .select(col("__term"))
-    val vocabRows =
-      (if ($(maxVocabSize) == Int.MaxValue) survivors
-       else survivors.limit($(maxVocabSize)))
-        .collect()
-    val vocab = vocabRows.map(_.getString(0))
+    // The (tf desc, term asc) order doubles as the deterministic
+    // maxVocabSize tie-break. Capped, limit() plans TakeOrderedAndProject
+    // (k rows per partition, k at the driver), so the collect is bounded
+    // by construction, not by hoping the trim thresholds are high.
+    // Uncapped, every survivor reaches the driver anyway, so it is
+    // ordered there, exactly as Spark would: tf descending, then the
+    // term by UTF8String order (unsigned UTF-8 bytes, which differs
+    // from String's UTF-16 order above the BMP) with null first. A
+    // Spark sort would add a range-sampling job and a sort exchange to
+    // every fit.
+    val vocab =
+      if ($(maxVocabSize) == Int.MaxValue)
+        survivors.select(col("__term"), col("__tf")).collect()
+          .map(r => (r.getString(0), r.getLong(1)))
+          .sortBy { case (t, tf) => (-tf, Option(t).map(UTF8String.fromString)) }
+          .map(_._1)
+      else
+        survivors.orderBy(desc("__tf"), asc("__term"))
+          .limit($(maxVocabSize)).select(col("__term")).collect()
+          .map(_.getString(0))
     copyValues(new TrimmedCountVectorizerModel(uid, vocab).setParent(this))
   }
 

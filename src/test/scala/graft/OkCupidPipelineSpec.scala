@@ -1,5 +1,10 @@
 package graft
 
+import graft.operators.{StratifiedSplit, TreePruning}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.ml.classification.DecisionTreeClassifier
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** End-to-end reference-pipeline replication on the fixture corpus:
@@ -31,24 +36,65 @@ class OkCupidPipelineSpec extends SparkSuite {
     assert(vocab.contains("code"))    // coding → code
   }
 
-  test("treePartitions never saturates the executor thread count: " +
-      "the cap is parallelism - 2 (the measured 52.9s cliff at 32 " +
-      "busy partitions on local[32]), growth below the cap follows " +
-      "rows/2048, and degenerate parallelism still yields >= 1") {
+  test("pinned split frame: unpinned confusion matrix, fewer jobs") {
+    // reference: the same split and tree over the unpinned features
+    val essays = OkCupidPipeline.withEssays(OkCupidPipeline.load(spark, fixturePath))
+      .withColumn("label", (col("sex") === "m").cast("double"))
+    val features = OkCupidPipeline.featurePipeline(1, 1).fit(essays)
+      .transform(essays).select(col("label"), col("features"))
+    val (train, test) = StratifiedSplit.split(features, "label", 0.7, 32984L)
+    val grown = new DecisionTreeClassifier()
+      .setLabelCol("label").setFeaturesCol("features")
+      .setMaxDepth(3).setSeed(32984L).fit(train)
+    val expected = TreePruning.pruneCp(grown, 0.02).transform(test)
+      .groupBy(col("prediction"), col("label")).agg(count(lit(1)).as("n"))
+      .orderBy(col("prediction"), col("label"))
+      .collect().toSeq
+
+    val sc = spark.sparkContext
+    val group = "okcupid-pinned-split"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val cells =
+      try {
+        sc.setJobGroup(group, "pinned split pipeline call")
+        val (confusion, _, _) = OkCupidPipeline.trainAndEvaluateTimed(
+          OkCupidPipeline.load(spark, fixturePath),
+          minDocFreq = 1, minTermFreq = 1, maxDepth = 3)
+        confusion.collect().toSeq
+      } finally {
+        sc.clearJobGroup()
+        ListenerDrain.waitUntilEmpty(sc, 30000L)
+        sc.removeSparkListener(listener)
+      }
+    assert(cells == expected)
+    // Job counts repeat exactly for a fixed config: 20 is the count at
+    // local[4] with one split computation, so a split (or a featurize
+    // chain) computed once per reader again fails here.
+    assert(jobs.get <= 20, s"pipeline call ran ${jobs.get} jobs")
+  }
+
+  test("treePartitions keeps two threads of headroom") {
     import OkCupidPipeline.treePartitions
-    // any corpus >= 63,488 rows used to select 32 partitions — the
-    // configuration the round-11 sweep measured at 52.9 s vs 8.5 s
-    // at 30; the clamp must keep 2 threads of headroom
-    assert(treePartitions(32, 63488L, 2048L) === 30)
-    assert(treePartitions(32, 10000000L, 2048L) === 30)
+    // the cap is parallelism - 2: any corpus >= 63,488 rows would
+    // otherwise select all 32 partitions on local[32], the measured
+    // 52.9 s cliff against 8.5 s at 30
+    assert(treePartitions(32, 63488L) === 30)
+    assert(treePartitions(32, 10000000L) === 30)
     // below the cap: data-sized, ceil-ish (n/2048 + 1)
-    assert(treePartitions(32, 59946L, 2048L) === 30)
-    assert(treePartitions(32, 20480L, 2048L) === 11)
-    assert(treePartitions(32, 1L, 2048L) === 1)
+    assert(treePartitions(32, 59946L) === 30)
+    assert(treePartitions(32, 20480L) === 11)
+    assert(treePartitions(32, 1L) === 1)
     // degenerate session widths never go to zero
-    assert(treePartitions(1, 100000L, 2048L) === 1)
-    assert(treePartitions(2, 100000L, 2048L) === 1)
-    assert(treePartitions(3, 100000L, 2048L) === 1)
-    assert(treePartitions(4, 100000L, 2048L) === 2)
+    assert(treePartitions(1, 100000L) === 1)
+    assert(treePartitions(2, 100000L) === 1)
+    assert(treePartitions(3, 100000L) === 1)
+    assert(treePartitions(4, 100000L) === 2)
   }
 }

@@ -41,4 +41,24 @@ class TrimmedCountVectorizerSpec extends SparkSuite {
     assert(fitVocab(new TrimmedCountVectorizer().setMaxVocabSize(100))
       == Seq("a", "b", "c", "d", "e"))
   }
+
+  test("uncapped order is Spark's: tf desc, then UTF-8 bytes, null first") {
+    val fullwidthA = new String(Character.toChars(0xFF21)) // EF BC A1
+    val emoji = new String(Character.toChars(0x1F600))     // F0 9F 98 80
+    // UTF-16 puts the emoji's high surrogate (D83D) before FF21; UTF-8
+    // puts it after, so String order would get this pair wrong
+    assert(emoji < fullwidthA)
+    // tf: c=3; null, b, fullwidthA and emoji tie at 2
+    val ties = Seq(
+      Seq(emoji, fullwidthA, null, "b"),
+      Seq("c", fullwidthA, "c", null, emoji, "b", "c")).toDF("tokens")
+    def vocab(cv: TrimmedCountVectorizer): Seq[String] =
+      cv.setInputCol("tokens").fit(ties).vocabulary.toSeq
+    val uncapped = vocab(new TrimmedCountVectorizer())
+    assert(uncapped == Seq("c", null, "b", fullwidthA, emoji))
+    // the capped path sorts in Spark: each cap returns a prefix
+    for (k <- 1 to uncapped.size + 1)
+      assert(vocab(new TrimmedCountVectorizer().setMaxVocabSize(k))
+        == uncapped.take(k), s"cap $k")
+  }
 }
